@@ -15,8 +15,9 @@ navigation chrome, ads, scripts, or footers. The family here:
   tag-stripper that does not remove script/comment content wholesale, or
   a tokenizer that reads ``title="rev>0"`` as a tag boundary, emits
   phantom blocks and cannot match.
-- :func:`clean_invisible` — remove ``<script>``/``<style>`` elements
-  (with their content) and comments; these are never visible text.
+- invisible-element removal — ``<script>``/``<style>`` elements (with
+  their content) and comments go first in every extractor below; they
+  are never visible text.
 - :func:`block_structs` — segment the page into BLOCK-level elements
   (``p``/``div``/``nav``/``footer``) and compute per-block metrics:
   visible text (tags stripped, whitespace collapsed, entities decoded —
@@ -48,6 +49,12 @@ JVM codegen, no UDF); the only shuffle any registered query adds is the
 per-block explode's none at all — ``posexplode`` is a Generate in the
 same stage as the scan.
 
+The builders (:func:`synth_html`, :func:`block_structs`,
+:func:`extract_metadata`, :func:`extract_links`) take SQL expression
+text and return one ``F.expr`` each, so a whole builder costs one
+server-side parse; the frame-level helpers (:func:`with_blocks`,
+:func:`doc_content_summary`, :func:`content_gate`) take column names.
+
 Reference parity note: jehiah/gomrjob has no HTML layer (it is a job
 framework); this family is part of the LLM-training-data surface the
 build brief adds on top (SURVEY.md §2F extensions), composing with
@@ -60,14 +67,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _idiv(a: Column, b) -> Column:
-    """Exact bigint division (SQL ``div``): float '/'+cast truncates
-    correctly only below 2^53 — past it the double quotient rounds and
-    can land off-by-one vs DuckDB's integer '//' (all gate operands
-    here are non-negative, where truncation == floor on both
-    engines)."""
-    return F.call_function("div", a.cast("bigint"), F.lit(b) if isinstance(b, int) else b)
+from gomrjob_spark.operators.robots import _sql_lit
+from gomrjob_spark.operators.urls import (
+    _registered_domain_sql,
+    _sql_ident,
+    _url_normalize_sql,
+)
 
 #: any tag, quote-aware: a raw ``>`` inside a double-quoted attribute
 #: value does NOT terminate the tag (synthesized decoy: title="rev>0")
@@ -110,26 +115,16 @@ MAX_LINK_DENSITY_PM = 300
 CHUNK = 200
 
 
-def _sql_lit(s: str) -> str:
-    """A Python string as a SQL string literal (backslashes and quotes
-    escaped — the robots-family helper)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _idiv_sql(a: str, b: int) -> str:
+def _idiv_sql(a: str, b: int | str) -> str:
+    """Exact bigint division: a float '/' plus cast truncates correctly
+    only below 2^53 — past it the double quotient rounds and can land
+    off-by-one vs DuckDB's integer '//' (all operands here are
+    non-negative, where truncation == floor on both engines)."""
     return f"(CAST({a} AS BIGINT) DIV {b})"
 
 
 def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
-    """:func:`synth_html` as ONE SQL string over expression texts (the
-    r14 SQL-string device, r14 verdict item #5): the whole page formula
-    parses server-side in one round trip. IF ≡ when/otherwise,
-    substring ≡ Column.substr, DIV ≡ call_function('div');
-    differential-pinned in tests/test_html.py."""
+    """:func:`synth_html` over expression texts."""
     d = f"CAST({doc_id} AS BIGINT)"
     t = f"coalesce({text}, '')"
     la = f"coalesce({lang if lang is not None else _sql_lit('und')}, 'und')"
@@ -167,6 +162,9 @@ def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
         "'</p><a href=\"http://evil', CAST({d} % 4 AS STRING), "
         "'.example/x\">c</a>\";</script>', "
         "'<!-- build ', CAST({d} % 97 AS STRING), ' <p>also fake</p> -->', "
+        # '<pre>' decoy: a buggy boundary-free block pattern matches
+        # its 'p' and fabricates a block; correctly it is inline
+        # markup whose text joins the promo fragment
         "'<pre>v', CAST({d} % 5 AS STRING), '</pre>', "
         "'<div class=\"meta\" title=\"rev>0\">updated ', "
         "CAST({d} % 28 AS STRING), '</div>', "
@@ -178,150 +176,22 @@ def _synth_html_sql(doc_id: str, text: str, lang: str | None) -> str:
     ).format(la=la, d=d, canonical=canonical, paras=paras)
 
 
-def synth_html(
-    doc_id: Column | str, text: Column | str = None, lang=None
-) -> Column:
-    if isinstance(doc_id, str):
-        return F.expr(
-            _synth_html_sql(
-                _sql_ident(doc_id),
-                _sql_ident(text),
-                _sql_ident(lang) if lang is not None else None,
-            )
-        )
-    return _synth_html_dsl(doc_id, text, lang)
-
-
-def _synth_html_dsl(
-    doc_id: Column, text: Column, lang: Column | None = None
-) -> Column:
-    """Deterministic HTML page per document — mirrored byte-for-byte by
-    the oracle CTEs in plans/html.py (``_HTML_PAGE_SQL``). Content =
-    the document text in CHUNK-char ``<p>`` blocks (every 4th gets an
-    inline anchor); boilerplate = nav bar, promo div (entity-encoded
-    anchor text), script + comment decoys each embedding a fake
-    ``<p>`` block, an attribute with a raw ``>``, and a footer link
-    cluster. The head carries the metadata surface real extractors
-    read (html_metadata): a lang attribute (the fixture's REAL lang
-    column when provided), title, meta description, and — on all but
-    every 9th document — a rel=canonical link whose URL derives from
-    ``doc_id DIV 6``, so canonical-dedup groups merge TWO url-dedup
-    triples (distinct URLs declaring one canonical, the case that
-    makes canonical dedup a different operator from URL dedup)."""
-    d = doc_id.cast("bigint")
-    t = F.coalesce(text, F.lit(""))
-    lang_attr = F.coalesce(
-        lang if lang is not None else F.lit("und"), F.lit("und")
-    )
-    g2 = _idiv(d, 6)
-    canonical = F.when(
-        d % 9 == 8, F.lit("")
-    ).otherwise(
-        F.concat(
-            F.lit('<link rel="canonical" href="https://canon.site'),
-            (g2 % 11).cast("string"),
-            F.lit(".com/c"),
-            g2.cast("string"),
-            F.lit('">'),
-        )
-    )
-    n = F.length(t)
-    idxs = F.when(
-        n > 0,
-        F.sequence(
-            F.lit(0).cast("bigint"), _idiv(n + F.lit(CHUNK - 1), CHUNK) - 1
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    paras = F.array_join(
-        F.transform(
-            idxs,
-            lambda i: F.concat(
-                F.lit('<p class="c'),
-                (d % 3).cast("string"),
-                F.lit('">'),
-                t.substr((i * CHUNK + F.lit(1)).cast("int"), F.lit(CHUNK)),
-                F.when(
-                    (d + i) % 4 == 0,
-                    F.concat(
-                        F.lit(' <a href="/r'), i.cast("string"), F.lit('">more</a>')
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit("</p>"),
-            ),
-        ),
-        "",
-    )
-    return F.concat(
-        F.lit('<html lang="'),
-        lang_attr,
-        F.lit('"><head><title>Doc '),
-        d.cast("string"),
-        F.lit('</title><meta name="description" content="Summary '),
-        (d % 50).cast("string"),
-        F.lit(' &amp; notes">'),
-        canonical,
-        F.lit("<style>p{font:12px}</style></head><body>"),
-        F.lit('<nav><a href="/">Home</a> | <a href="/about">About</a> | <a href="/c'),
-        (d % 5).cast("string"),
-        F.lit('">Contact</a></nav>'),
-        paras,
-        F.lit('<div class="promo"><a href="/buy?x='),
-        d.cast("string"),
-        F.lit('">Buy now &amp; save &lt;deals&gt;</a></div>'),
-        F.lit('<script>var p = "<p>fake '),
-        d.cast("string"),
-        F.lit('</p><a href="http://evil'),
-        (d % 4).cast("string"),
-        F.lit('.example/x">c</a>";</script>'),
-        F.lit("<!-- build "),
-        (d % 97).cast("string"),
-        F.lit(" <p>also fake</p> -->"),
-        # '<pre>' decoy: a buggy boundary-free block pattern matches
-        # its 'p' and fabricates a block; correctly it is inline
-        # markup whose text joins the promo fragment
-        F.lit("<pre>v"),
-        (d % 5).cast("string"),
-        F.lit("</pre>"),
-        F.lit('<div class="meta" title="rev>0">updated '),
-        (d % 28).cast("string"),
-        F.lit("</div>"),
-        F.lit('<footer>Copyright &amp; Terms <abbr>TM</abbr> <a href="/t">Terms</a> <a href="/p">Privacy</a> <a href="http://partner'),
-        (d % 7).cast("string"),
-        F.lit('.example/p'),
-        (d % 3).cast("string"),
-        F.lit('">Partner</a></footer>'),
-        F.lit("</body></html>"),
-    )
-
-
-def clean_invisible(html: Column) -> Column:
-    """Remove script/style elements with their content, then comments —
-    BEFORE block segmentation, so markup inside script strings or
-    comments can never fabricate blocks."""
-    out = html
-    for pat in INVISIBLE_PATTERNS:
-        out = F.regexp_replace(out, pat, "")
-    return out
-
-
-def decode_entities(col: Column) -> Column:
-    """Minimal entity decode (module table, ``&amp;`` last)."""
-    out = col
-    for ent, ch in ENTITIES:
-        out = F.replace(out, F.lit(ent), F.lit(ch))
-    return out
-
-
-def visible_text(frag: Column) -> Column:
-    """Fragment -> visible text: strip tags (quote-aware), collapse
-    whitespace, trim, THEN decode entities (encoded angle brackets are
-    text, not markup)."""
-    stripped = F.regexp_replace(frag, TAG_ANY, "")
-    return decode_entities(F.trim(F.regexp_replace(stripped, "\\s+", " ")))
-
-
-def _stop_hits(txt: Column) -> Column:
-    return F.size(F.filter(F.split(txt, " "), lambda w: w.isin(*STOPWORDS)))
+def synth_html(doc_id: str, text: str, lang: str | None = None) -> Column:
+    """Deterministic HTML page per document over expression texts —
+    mirrored byte-for-byte by the oracle CTEs in plans/html.py
+    (``_HTML_PAGE_SQL``). Content = the document text in CHUNK-char
+    ``<p>`` blocks (every 4th gets an inline anchor); boilerplate = nav
+    bar, promo div (entity-encoded anchor text), script + comment
+    decoys each embedding a fake ``<p>`` block, an attribute with a raw
+    ``>``, and a footer link cluster. The head carries the metadata
+    surface real extractors read (html_metadata): a lang attribute (the
+    fixture's REAL lang column when provided, else ``und``), title,
+    meta description, and — on all but every 9th document — a
+    rel=canonical link whose URL derives from ``doc_id DIV 6``, so
+    canonical-dedup groups merge TWO url-dedup triples (distinct URLs
+    declaring one canonical, the case that makes canonical dedup a
+    different operator from URL dedup)."""
+    return F.expr(_synth_html_sql(doc_id, text, lang))
 
 
 def _clean_invisible_sql(h: str) -> str:
@@ -351,10 +221,7 @@ def _stop_hits_sql(txt: str) -> str:
 
 
 def _block_structs_sql(h: str) -> str:
-    """:func:`block_structs` as one SQL string over the html expression
-    text ``h`` — the same quote-aware segmentation, per-block metrics
-    and content verdict, parsed server-side in one round trip
-    (differential-pinned in tests/test_html.py)."""
+    """:func:`block_structs` over the html expression text ``h``."""
     ch = _clean_invisible_sql(h)
     frags = f"split({ch}, {_sql_lit(BLOCK_OPEN)})"
     opens = f"regexp_extract_all({ch}, {_sql_lit(BLOCK_OPEN_TAG)}, 1)"
@@ -366,8 +233,7 @@ def _block_structs_sql(h: str) -> str:
         f"CAST(0 AS BIGINT), (acc, l) -> acc + length({_decode_entities_sql('l')}))"
     )
     ld_pm = (
-        f"IF({n_chars} > 0, "
-        f"(CAST(1000 * {link_chars} AS BIGINT) DIV {n_chars}), "
+        f"IF({n_chars} > 0, {_idiv_sql(f'1000 * {link_chars}', n_chars)}, "
         "CAST(1000 AS BIGINT))"
     )
     n_words = (
@@ -384,58 +250,20 @@ def _block_structs_sql(h: str) -> str:
     return f"transform({opens}, (tag, i) -> {build})"
 
 
-def block_structs(html: Column | str) -> Column:
-    if isinstance(html, str):
-        return F.expr(_block_structs_sql(_sql_ident(html)))
-    return _block_structs_dsl(html)
-
-
-def _block_structs_dsl(html: Column) -> Column:
-    """Array of per-block metric structs in document order. The page is
-    segmented by splitting on block-level OPENING tags (quote-aware
-    pattern — the ``title="rev>0"`` decoy cannot truncate a tag) after
-    :func:`clean_invisible`; fragment i then ends with its own closing
-    tag, which the tag strip removes. Fields: tag, block_text, n_chars,
-    link_chars, link_density_pm, n_words, n_stop, is_content (module
-    contract). All metrics are integers (fixed-point permille density:
-    the repo's no-floats-in-gates convention); blocks with no text get
-    density 1000 (pure markup is chrome by definition)."""
-    ch = clean_invisible(html)
-    frags = F.split(ch, BLOCK_OPEN)
-    opens = F.regexp_extract_all(ch, F.lit(BLOCK_OPEN_TAG), 1)
-
-    def build(tag: Column, i: Column) -> Column:
-        frag = F.element_at(frags, (i + F.lit(2)).cast("int"))
-        txt = visible_text(frag)
-        n_chars = F.length(txt).cast("bigint")
-        link_chars = F.aggregate(
-            F.regexp_extract_all(frag, F.lit(LINK_TEXT), 1),
-            F.lit(0).cast("bigint"),
-            lambda acc, l: acc + F.length(decode_entities(l)),
-        )
-        ld_pm = F.when(
-            n_chars > 0, _idiv(F.lit(1000) * link_chars, n_chars)
-        ).otherwise(F.lit(1000).cast("bigint"))
-        n_words = F.when(txt == "", F.lit(0)).otherwise(
-            F.size(F.split(txt, " "))
-        ).cast("bigint")
-        n_stop = _stop_hits(txt).cast("bigint")
-        return F.struct(
-            tag.alias("tag"),
-            txt.alias("block_text"),
-            n_chars.alias("n_chars"),
-            link_chars.alias("link_chars"),
-            ld_pm.alias("link_density_pm"),
-            n_words.alias("n_words"),
-            n_stop.alias("n_stop"),
-            (
-                (n_chars >= MIN_CONTENT_CHARS)
-                & (ld_pm <= MAX_LINK_DENSITY_PM)
-                & (n_stop >= 1)
-            ).alias("is_content"),
-        )
-
-    return F.transform(opens, build)
+def block_structs(html: str) -> Column:
+    """Array of per-block metric structs in document order, over the
+    html expression text. The page is segmented by splitting on
+    block-level OPENING tags (quote-aware pattern — the
+    ``title="rev>0"`` decoy cannot truncate a tag) after invisible
+    elements are removed; fragment i then ends with its own closing
+    tag, which the tag strip removes. Visible text is tags stripped,
+    whitespace collapsed and trimmed, THEN entities decoded (encoded
+    angle brackets are text, not markup). Fields: tag, block_text,
+    n_chars, link_chars, link_density_pm, n_words, n_stop, is_content
+    (module contract). All metrics are integers (fixed-point permille
+    density: the repo's no-floats-in-gates convention); blocks with no
+    text get density 1000 (pure markup is chrome by definition)."""
+    return F.expr(_block_structs_sql(html))
 
 
 #: anchor hrefs, in document order; the synthesis contract puts href
@@ -444,8 +272,7 @@ HREF_PAT = '<a href="([^"]*)"'
 
 
 def _extract_metadata_sql(h: str) -> str:
-    """:func:`extract_metadata` as one SQL string (same clean-first,
-    decode-after contract)."""
+    """:func:`extract_metadata` over the html expression text ``h``."""
     ch = _clean_invisible_sql(h)
     title = _decode_entities_sql(
         "trim(regexp_replace(regexp_extract("
@@ -476,52 +303,21 @@ def _extract_metadata_sql(h: str) -> str:
     )
 
 
-def extract_metadata(html: Column | str) -> Column:
-    if isinstance(html, str):
-        return F.expr(_extract_metadata_sql(_sql_ident(html)))
-    return _extract_metadata_dsl(html)
-
-
-def _extract_metadata_dsl(html: Column) -> Column:
+def extract_metadata(html: str) -> Column:
     """Struct (title, lang_attr, description, canonical_href,
-    has_canonical) from the page head — the metadata surface every
-    crawl extractor reads before touching the body: the title and
-    description feed snippet/quality signals, the lang attribute is
-    the langid prior, and rel=canonical is the publisher's OWN dedup
-    hint (grouping by it merges distinct URLs that declare one
-    canonical — see dedup_canonical). Invisible elements are removed
-    FIRST (a script string could embed a fake ``<title>``); entity
-    decode applies to the human-readable fields. Row-local codegen,
-    zero shuffles."""
-    ch = clean_invisible(html)
-    title = decode_entities(
-        F.trim(
-            F.regexp_replace(
-                F.regexp_extract(ch, "(?s)<title>(.*?)</title>", 1),
-                "\\s+",
-                " ",
-            )
-        )
-    )
-    lang_attr = F.regexp_extract(
-        ch, '<html(?:[^>"]|"[^"]*")*?lang="([^"]*)"', 1
-    )
-    description = decode_entities(
-        F.regexp_extract(ch, '<meta name="description" content="([^"]*)"', 1)
-    )
-    canonical = F.regexp_extract(
-        ch, '<link rel="canonical" href="([^"]*)"', 1
-    )
-    return F.struct(
-        title.alias("title"),
-        lang_attr.alias("lang_attr"),
-        description.alias("description"),
-        canonical.alias("canonical_href"),
-        (canonical != "").alias("has_canonical"),
-    )
+    has_canonical) from the page head of the html expression text —
+    the metadata surface every crawl extractor reads before touching
+    the body: the title and description feed snippet/quality signals,
+    the lang attribute is the langid prior, and rel=canonical is the
+    publisher's OWN dedup hint (grouping by it merges distinct URLs
+    that declare one canonical — see dedup_canonical). Invisible
+    elements are removed FIRST (a script string could embed a fake
+    ``<title>``); entity decode applies to the human-readable fields.
+    Row-local codegen, zero shuffles."""
+    return F.expr(_extract_metadata_sql(html))
 
 
-def extract_links(html: Column, base_url: Column) -> Column:
+def extract_links(html: str, base_url: str) -> Column:
     """Array of per-link structs (href, resolved_url, link_domain,
     is_internal) in document order — the link-graph half of WET
     derivation (the other half is the text; both come from the same
@@ -534,32 +330,24 @@ def extract_links(html: Column, base_url: Column) -> Column:
     re-normalized through the urls-family contract, and is_internal
     compares registered domains (the crawl frontier's same-site test).
     Row-local codegen, zero shuffles."""
-    from gomrjob_spark.operators.urls import registered_domain, url_normalize
-
-    base_prefix = F.regexp_extract(base_url, "^([a-z]+://[^/?#]+)", 1)
-    base_domain = registered_domain(
-        F.regexp_extract(base_url, "^[a-z]+://([^/:?#]+)", 1)
+    host = "regexp_extract({}, '^[a-z]+://([^/:?#]+)', 1)"
+    base_prefix = f"regexp_extract({base_url}, '^([a-z]+://[^/?#]+)', 1)"
+    base_domain = _registered_domain_sql(host.format(base_url))
+    hrefs = (
+        f"regexp_extract_all({_clean_invisible_sql(html)}, "
+        f"{_sql_lit(HREF_PAT)}, 1)"
     )
-    hrefs = F.regexp_extract_all(
-        clean_invisible(html), F.lit(HREF_PAT), 1
+    raw_abs = (
+        "IF(href RLIKE '^[A-Za-z][A-Za-z0-9+.-]*://', href, "
+        f"concat({base_prefix}, href))"
     )
-
-    def build(href: Column) -> Column:
-        raw_abs = F.when(
-            href.rlike("^[A-Za-z][A-Za-z0-9+.-]*://"), href
-        ).otherwise(F.concat(base_prefix, href))
-        resolved = url_normalize(raw_abs)
-        link_domain = registered_domain(
-            F.regexp_extract(resolved, "^[a-z]+://([^/:?#]+)", 1)
-        )
-        return F.struct(
-            href.alias("href"),
-            resolved.alias("resolved_url"),
-            link_domain.alias("link_domain"),
-            (link_domain == base_domain).alias("is_internal"),
-        )
-
-    return F.transform(hrefs, build)
+    resolved = _url_normalize_sql(raw_abs)
+    link_domain = _registered_domain_sql(host.format(resolved))
+    return F.expr(
+        f"transform({hrefs}, href -> named_struct('href', href, "
+        f"'resolved_url', {resolved}, 'link_domain', {link_domain}, "
+        f"'is_internal', {link_domain} = {base_domain}))"
+    )
 
 
 def with_blocks(
@@ -568,7 +356,7 @@ def with_blocks(
     """Stage the block-struct array as a real column (staging, not
     CSE-hoping: the repo rule for expressions referenced more than
     once)."""
-    return df.withColumn(out_col, block_structs(html_col))
+    return df.withColumn(out_col, block_structs(_sql_ident(html_col)))
 
 
 def doc_content_summary(
@@ -585,8 +373,6 @@ def doc_content_summary(
         lambda arr, field: f"aggregate({arr}, CAST(0 AS BIGINT), "  # noqa: E731
         f"(acc, b) -> acc + b.{field})"
     )
-    # one SQL parse per derived column (the r14 SQL-string device);
-    # expression-for-expression identical to the HOF DSL this replaces
     return df.withColumns(
         {
             "n_blocks": F.expr(f"CAST(size({blocks}) AS BIGINT)"),
@@ -606,10 +392,11 @@ def content_gate(df: DataFrame, min_ppm: int = 500_000) -> DataFrame:
     dominates chrome AND at least one content block exists. Documents
     with no visible text at all get ppm 0 (rejected) — an empty page is
     chrome."""
-    ppm = F.when(
-        F.col("total_chars") > 0,
-        _idiv(F.lit(1_000_000) * F.col("content_chars"), F.col("total_chars")),
-    ).otherwise(F.lit(0).cast("bigint"))
+    ppm = F.expr(
+        "IF(total_chars > 0, "
+        f"{_idiv_sql('1000000 * content_chars', 'total_chars')}, "
+        "CAST(0 AS BIGINT))"
+    )
     staged = df.withColumn("content_ppm", ppm)
     return staged.withColumn(
         "admitted",

@@ -152,31 +152,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_signature(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: one bit per hyperplane, packed into a long.
-
-    The plane matrix is ONE SQL literal folded by a single nested-HOF
-    expression (re-planned r14 — the r13 verdict's item #3: the
-    previous form built every plane as per-element ``F.lit`` arrays,
-    ~n_planes x dim py4j round-trips per call site, the exact r5
-    gotcha #4 that :func:`_sql_arr` exists to prevent). ``vec`` must be
-    a plain column name or simple column reference — it is inlined into
-    the SQL expression, so referencing it inside the inner lambda costs
-    nothing (no CSE hazard)."""
-    vec_sql = vec if isinstance(vec, str) else vec._jc.toString()
-    mat = "array(" + ",".join(_sql_arr(p) for p in planes) + ")"
-    return F.expr(
-        f"""aggregate(
-            zip_with({mat}, sequence(0, {len(planes) - 1}),
-              (p, i) -> IF(
-                aggregate(zip_with({vec_sql}, p, (x, y) -> x * y),
-                          CAST(0 AS DOUBLE), (a, x) -> a + x) >= 0,
-                shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)),
-                CAST(0 AS BIGINT))),
-            CAST(0 AS BIGINT), (a, x) -> a + x)"""
-    )
-
-
 def lsh_bucket(
     df: DataFrame,
     dim: int,
@@ -935,16 +910,6 @@ def _sq_dist_fold(vec_sql: str, arr_sql: str) -> str:
         f"aggregate(zip_with({vec_sql}, {arr_sql}, "
         "(x, y) -> power(CAST(x AS DOUBLE) - CAST(y AS DOUBLE), 2)), "
         "CAST(0.0 AS DOUBLE), (acc, w) -> acc + w)"
-    )
-
-
-def _dot_sql(vec_sql: str, vals: list[float]) -> str:
-    """Dot product against a literal vector as one SQL string (same
-    sequential left fold as :func:`dot`)."""
-    return (
-        f"aggregate(zip_with({vec_sql}, {_sql_arr(vals)}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
 
 

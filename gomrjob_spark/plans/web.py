@@ -1715,7 +1715,7 @@ def html_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = scoped_persist(
         staged.select(
             "doc_id",
-            extract_links(F.col("html"), F.col("norm_url")).alias("links"),
+            extract_links("html", "norm_url").alias("links"),
         )
     )
     exploded = staged.select(
@@ -1805,7 +1805,7 @@ def url_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     linked = scoped_persist(
         staged.select(
             F.col("registered_domain").alias("src"),
-            extract_links(F.col("html"), F.col("norm_url")).alias("links"),
+            extract_links("html", "norm_url").alias("links"),
         )
     )
     links = linked.select("src", F.explode("links").alias("link"))
@@ -2052,10 +2052,7 @@ def corpus_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bigint"
         ),
     )
-    rules_sql = robots._parse_rules_sql(
-        robots._synth_robots_sql("CAST(`k` AS BIGINT)")
-    )
-    verdict = robots.robots_verdict("path", rules_sql)
+    verdict = robots.site_robots_verdict("path", "k")
     gated = content_gate(doc_content_summary(with_blocks(staged)))
     f0 = gated.select(
         "doc_id",
@@ -2379,10 +2376,7 @@ def corpus_train_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract(F.col("registered_domain"), "site([0-9]+)", 1)
             .cast("bigint"),
         )
-        rules_sql = robots._parse_rules_sql(
-            robots._synth_robots_sql("CAST(`k` AS BIGINT)")
-        )
-        verdict = robots.robots_verdict("path", rules_sql)
+        verdict = robots.site_robots_verdict("path", "k")
         base = scoped_persist(
             staged.select(
                 "doc_id",

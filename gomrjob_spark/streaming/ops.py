@@ -1170,18 +1170,14 @@ def robots_gate_stream(
     """Live robots.txt admission — position MINUS ONE on the crawl
     frontier stream: each arriving URL's domain rules synthesize +
     parse row-locally and the RFC 9309 longest-match verdict emits
-    (operators.robots — the batch gate's exact program: parse_rules +
-    robots_verdict). In production the per-domain robots text arrives
+    (operators.robots.site_robots_verdict — the program the batch
+    funnels share). In production the per-domain robots text arrives
     as a slowly-changing dimension (the stream-static join pattern of
     kn_gate_stream); here it derives from the domain formula, so the
     topology stays stateless and the full hash gate covers the live
     path. Expects the URL-staged stream (norm_url +
     registered_domain columns, urls.with_url_columns)."""
-    from gomrjob_spark.operators.robots import (
-        parse_rules,
-        robots_verdict,
-        synth_robots,
-    )
+    from gomrjob_spark.operators.robots import site_robots_verdict
 
     staged = docs.select(
         id_col,
@@ -1193,8 +1189,7 @@ def robots_gate_stream(
         .cast("bigint")
         .alias("k"),
     )
-    rules = parse_rules(synth_robots(F.col("k")))
-    verdict = robots_verdict(F.col("path"), rules)
+    verdict = site_robots_verdict("path", "k")
     return staged.select(
         id_col,
         "registered_domain",

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -11,6 +12,15 @@ from gomrjob_spark.session import get_session
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def frame_digest(df) -> str:
+    """Order-independent sha256 of a frame's rows: each row is digested
+    as JSON, and the sorted row digests are hashed together."""
+    from pyspark.sql import functions as F
+
+    rows = df.select(F.sha2(F.to_json(F.struct(*df.columns)), 256)).collect()
+    return hashlib.sha256("".join(sorted(r[0] for r in rows)).encode()).hexdigest()
 
 
 @pytest.fixture(scope="session")

@@ -17,8 +17,8 @@ from gomrjob_spark.operators import robots as R
 
 def _verdict(spark, txt: str, path: str):
     df = spark.createDataFrame([(txt, path)], "txt string, path string")
-    out = df.select(
-        R.robots_verdict(F.col("path"), R.parse_rules(F.col("txt"))).alias("v")
+    out = df.withColumn("rules", R.parse_rules("txt")).select(
+        R.robots_verdict("path", "rules").alias("v")
     ).select("v.*")
     return out.first()
 
@@ -38,7 +38,7 @@ class TestParse:
     def test_only_allow_disallow_become_rules(self, spark):
         df = spark.createDataFrame([(ROBOTS,)], "txt string")
         rules = df.select(
-            R.parse_rules(F.col("txt")).alias("r")
+            R.parse_rules("txt").alias("r")
         ).first()["r"]
         assert [(r["allow"], r["prefix"]) for r in rules] == [
             (False, "/private"),
@@ -178,8 +178,9 @@ class TestSynthesizedGroupDecoy:
         domain's own three rules (an all-groups parse would block
         everything and fail the driver hash gate)."""
         df = spark.createDataFrame([(6,)], "k bigint")
-        rules = df.select(
-            R.parse_rules(R.synth_robots(F.col("k"))).alias("r")
+        staged = df.withColumn("robots_txt", R.synth_robots("k"))
+        rules = staged.select(
+            R.parse_rules("robots_txt").alias("r")
         ).first()["r"]
         assert [(r["allow"], r["prefix"]) for r in rules] == [
             (False, "/a2"),
@@ -188,7 +189,7 @@ class TestSynthesizedGroupDecoy:
         ]
         # and the decoy group is genuinely present in the file bytes
         txt = df.select(
-            R.synth_robots(F.col("k")).alias("t")
+            R.synth_robots("k").alias("t")
         ).first()["t"]
         assert "User-agent: badbot" in txt
 
@@ -251,56 +252,57 @@ class TestPatternRules:
         assert wild > 0 and anch > 0  # both pattern rules non-vacuous
 
 
-def test_sql_string_robots_match_dsl(spark):
-    """The r15 SQL-string forms of synth_robots / parse_rules /
-    robots_verdict (one server-side parse per consuming query) must
-    evaluate bit-identically to the Column-DSL forms at every named
-    call site — over every fixture site number x every fixture path
-    shape, so every rule class (pattern, end-anchor, Allow override,
-    second group, tie) is exercised on both paths."""
-    import pyspark.sql.functions as F
+#: frame_digest of each builder's output over _golden_frames' inputs,
+#: recorded while the builders still had a Column-DSL twin that tests
+#: held bit-identical to the SQL text
+GOLDEN = {
+    "synth_robots": "c515bf2b5b399c4677bfabfbe3bfcafc9cf18cd930806d8aa3c2be8244e8194d",
+    "parse_rules": "a0f901b9faccbf6a8ea722238e0f334db226d28c27f6c8501c98c58132bd6e85",
+    "robots_verdict": "465b4ff27aecad345986b23718885eaa14a7d10082bff2b99bcf0b837f2d7c76",
+    "chain": "465b4ff27aecad345986b23718885eaa14a7d10082bff2b99bcf0b837f2d7c76",
+}
 
-    from gomrjob_spark.operators import robots
+#: one path per rule class: pattern, end anchor, Allow override, tie,
+#: the second group, and the empty and root paths
+_PATHS = ["/a0/p7", "/a1/p9/", "/buy", "/a2", "/x0", "/", "", "/a3/p0", "/a0p"]
+
+
+def _golden_frames(spark) -> dict:
+    """Every fixture site number x every path shape, through each
+    builder on its own and through the composed synth -> parse ->
+    verdict chain."""
+    ks = spark.range(0, 300).select(F.col("id").alias("k"))
+    paths = spark.createDataFrame([(p,) for p in _PATHS], "path string")
+    txts = ks.withColumn("robots_txt", R.synth_robots("k"))
+    rules = txts.select("k", R.parse_rules("robots_txt").alias("rules"))
+    chain = R.robots_verdict(
+        "path", R._parse_rules_sql(R._synth_robots_sql("CAST(`k` AS BIGINT)"))
+    )
+    return {
+        "synth_robots": txts,
+        "parse_rules": rules,
+        "robots_verdict": rules.crossJoin(paths).select(
+            "k", "path", R.robots_verdict("path", "rules").alias("v")
+        ),
+        "chain": ks.crossJoin(paths).select("k", "path", chain.alias("v")),
+    }
+
+
+def test_sql_robots_match_golden(spark):
+    from conftest import frame_digest
+
+    got = {k: frame_digest(df) for k, df in _golden_frames(spark).items()}
+    assert got == GOLDEN
+
+
+def test_site_robots_verdict_matches_chain_golden(spark):
+    """The composed helper the funnels and the stream gate call is the
+    golden synth -> parse -> verdict chain."""
+    from conftest import frame_digest
 
     ks = spark.range(0, 300).select(F.col("id").alias("k"))
-    d1 = ks.select(
-        robots.synth_robots("k").alias("a"),
-        robots.synth_robots(F.col("k")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d1.count() == 0
-
-    txts = ks.withColumn("robots_txt", robots.synth_robots("k"))
-    d2 = txts.select(
-        robots.parse_rules("robots_txt").alias("a"),
-        robots.parse_rules(F.col("robots_txt")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert d2.count() == 0
-
-    paths = spark.createDataFrame(
-        [("/a0/p7",), ("/a1/p9/",), ("/buy",), ("/a2",), ("/x0",),
-         ("/",), ("",), ("/a3/p0",), ("/a0p",)],
-        "path string",
+    paths = spark.createDataFrame([(p,) for p in _PATHS], "path string")
+    got = ks.crossJoin(paths).select(
+        "k", "path", R.site_robots_verdict("path", "k").alias("v")
     )
-    both = txts.withColumn(
-        "rules", robots.parse_rules("robots_txt")
-    ).crossJoin(paths)
-    va = robots.robots_verdict("path", "rules")
-    vb = robots.robots_verdict(F.col("path"), F.col("rules"))
-    d3 = both.select(va.alias("a"), vb.alias("b")).filter("NOT (a <=> b)")
-    assert d3.count() == 0
-
-    # the composed all-SQL chain (the funnel/train call shape) equals
-    # the all-DSL chain end to end
-    comp_sql = robots.robots_verdict(
-        "path",
-        robots._parse_rules_sql(robots._synth_robots_sql("CAST(`k` AS BIGINT)")),
-    )
-    comp_dsl = robots._robots_verdict_dsl(
-        F.col("path"), robots._parse_rules_dsl(robots.synth_robots(F.col("k")))
-    )
-    d4 = (
-        ks.crossJoin(paths)
-        .select(comp_sql.alias("a"), comp_dsl.alias("b"))
-        .filter("NOT (a <=> b)")
-    )
-    assert d4.count() == 0
+    assert frame_digest(got) == GOLDEN["chain"]

@@ -16,7 +16,7 @@ from gomrjob_spark.plans.web import BLOCKLIST, _docs_with_urls
 
 def _norm(spark, raw: str) -> str:
     df = spark.createDataFrame([(raw,)], "url string")
-    return df.select(urls.url_normalize(F.col("url")).alias("n")).first()["n"]
+    return df.select(urls.url_normalize("url").alias("n")).first()["n"]
 
 
 @pytest.mark.parametrize(
@@ -56,9 +56,9 @@ def test_normalize_idempotent(spark):
     """normalize(normalize(u)) == normalize(u) — canonical forms are
     fixed points (the property that makes incremental recrawls safe)."""
     df = _docs_with_urls(spark, "/root/testdata/sf0.001")
-    staged = df.select(urls.url_normalize(F.col("url")).alias("n1"))
+    staged = df.select(urls.url_normalize("url").alias("n1"))
     twice = staged.select(
-        "n1", urls.url_normalize(F.col("n1")).alias("n2")
+        "n1", urls.url_normalize("n1").alias("n2")
     ).filter(F.col("n1") != F.col("n2"))
     assert twice.count() == 0
 
@@ -75,7 +75,7 @@ def test_normalize_idempotent(spark):
 )
 def test_registered_domain(spark, host, expected):
     df = spark.createDataFrame([(host,)], "h string")
-    got = df.select(urls.registered_domain(F.col("h")).alias("d")).first()["d"]
+    got = df.select(urls.registered_domain("h").alias("d")).first()["d"]
     assert got == expected
 
 
@@ -295,23 +295,22 @@ def test_cdxj_lines_are_surt_sorted_and_json_parseable(spark, sf_dir):
         assert j["length"].isdigit() and j["offset"].isdigit()  # CC strings
 
 
-def test_sql_string_builders_match_dsl(spark):
-    """The r15 SQL-string forms of synth_url / url_normalize /
-    registered_domain (one server-side parse per consuming query)
-    must evaluate bit-identically to the Column-DSL forms they
-    replace at every named-column call site — over the whole sf0.001
-    id range plus adversarial URL shapes (every noise class of the
-    canonicalization contract)."""
-    ids = spark.range(0, 2000).select(F.col("id").alias("doc_id"))
-    diff = ids.select(
-        urls.synth_url("doc_id").alias("a"),
-        urls.synth_url(F.col("doc_id")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert diff.count() == 0
+#: frame_digest of each builder's output over _golden_frames' inputs,
+#: recorded while the builders still had a Column-DSL twin that tests
+#: held bit-identical to the SQL text
+GOLDEN = {
+    "synth_url": "c155d45128e49afd15f6e224a74e2af08727652d007f78a50b0da59541c22f0c",
+    "url_normalize": "dfe8811d505cd05a33f065a618e532c13f4982e6cafc8700cf47894238d0043d",
+    "registered_domain": "82c1f3859e1d29c17ca29be5431f3c26dce42ac5b6efb15cc4dc6d0e2f471d15",
+}
 
-    # normalize + registered_domain over the synthesized URLs AND
-    # hand-picked adversarial shapes (null query, default/odd ports,
-    # root paths, uppercase, tracking-only query, multi-label suffix)
+
+def _golden_frames(spark) -> dict:
+    """Every builder over the whole sf0.001 id range plus adversarial
+    URL shapes (null query, default/odd ports, root paths, uppercase,
+    tracking-only query, multi-label suffix)."""
+    ids = spark.range(0, 2000).select(F.col("id").alias("doc_id"))
+    synth = ids.select("doc_id", urls.synth_url("doc_id").alias("url"))
     extra = spark.createDataFrame(
         [
             ("HTTP://WWW.Site3.CO.UK:80/",),
@@ -323,20 +322,23 @@ def test_sql_string_builders_match_dsl(spark):
         ],
         "url string",
     )
-    both = ids.select(urls.synth_url("doc_id").alias("url")).unionByName(extra)
-    diff2 = both.select(
-        urls.url_normalize("url").alias("a"),
-        urls.url_normalize(F.col("url")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert diff2.count() == 0
-
-    hosts = both.select(
-        F.regexp_extract(
-            urls.url_normalize("url"), r"^[a-z]+://([^/:?#]+)", 1
-        ).alias("host")
+    normed = synth.select("url").unionByName(extra).select(
+        "url", urls.url_normalize("url").alias("norm_url")
     )
-    diff3 = hosts.select(
-        urls.registered_domain("host").alias("a"),
-        urls.registered_domain(F.col("host")).alias("b"),
-    ).filter("NOT (a <=> b)")
-    assert diff3.count() == 0
+    hosts = normed.select(
+        F.regexp_extract("norm_url", r"^[a-z]+://([^/:?#]+)", 1).alias("host")
+    )
+    return {
+        "synth_url": synth,
+        "url_normalize": normed,
+        "registered_domain": hosts.select(
+            "host", urls.registered_domain("host").alias("domain")
+        ),
+    }
+
+
+def test_sql_builders_match_golden(spark):
+    from conftest import frame_digest
+
+    got = {k: frame_digest(df) for k, df in _golden_frames(spark).items()}
+    assert got == GOLDEN
