@@ -13,35 +13,45 @@ reference                 engine
 ==========================  ==================================================
 ``Mapper(r, w)``          ``Step.mapper``: pandas-batch fn via ``mapInPandas``
 identity mapper           ``mapper=None`` (runner.go:281-287 ``io.Copy``)
-``Reducer(r, w)``         ``Step.reducer``: per-key fn via ``applyInPandas``,
-                          or a builtin (``SUM``) compiled to a native
-                          ``groupBy().agg()`` — the JVM fast path
+``Reducer(r, w)``         ``Step.reducer``: per-key fn called once per run
+                          of equal keys in a key-sorted partition
+                          (``repartition`` + ``sortWithinPartitions`` +
+                          one ``mapInPandas`` pass), or a builtin (``SUM``)
+                          compiled to a native ``groupBy().agg()`` — the
+                          JVM fast path
 ``Combiner``              builtin reducers: ignored — Spark's partial
                           aggregation already pre-reduces map-side
                           (runner.go:188-190 opt-in, automatic here).
                           Python reducers: honored — a per-batch
                           ``mapInPandas`` pre-reduce runs the combiner
-                          over each Arrow batch's key groups BEFORE the
-                          shuffle (map_reduce_step.go:15-17 contract,
-                          dispatch runner.go:290-295), so a hot key
-                          ships one partial per batch, not every row
+                          over each Arrow batch's key groups (null keys
+                          included) BEFORE the shuffle
+                          (map_reduce_step.go:15-17 contract, dispatch
+                          runner.go:290-295), so a hot key ships one
+                          partial per batch, not every row
 ``StepReducerTasksCount`` ``Step.reducer_tasks`` -> ``repartition(n, key)``
                           (AQE coalescing usually makes this unnecessary)
 multi-step chain          DataFrame composition — ONE logical plan, no
                           intermediate materialization; Catalyst fuses stages
 ==========================  ==================================================
 
-Grouped-stream semantics: reference reducers see each key's values in
-shuffle-sort (byte) order (SURVEY.md §1.3). ``applyInPandas`` guarantees no
-intra-group order, so ``Step(sorted_values=True)`` sorts each group's
-values before the reducer runs — only pay that cost for order-dependent
-reducers.
+Grouped-stream semantics: the reference reduces a key-sorted stream by
+run length (mrproto/protocol.go:101-116). A Python reducer does the same:
+each shuffle partition is sorted by key, and every run of equal keys
+(null keys form one run) reaches the reducer once, as
+``(key, DataFrame indexed 0..n-1)``, even when the run spans Arrow
+batches. Values within a run arrive in no particular order unless
+``Step(sorted_values=True)``, which adds ``value`` to the JVM sort so the
+reducer sees the byte-sorted stream the reference guarantees
+(SURVEY.md §1.3) — only pay that cost for order-dependent reducers.
 
 Scale: builtin reducers stay entirely JVM-side with map-side partial
 aggregation (the reference's Combiner+LRU trick, protocol.go/exampleLRU,
-for free). Python reducers move one Arrow batch per group — prefer
-builtins; when a Python reducer is unavoidable it still distributes
-per-key across executors.
+for free). A Python reducer costs one shuffle, one JVM sort and one
+Python pass per partition, whose Arrow batches carry many keys; prefer
+builtins, but a Python reducer still distributes per key across
+executors. Mappers run one task per input split, as Hadoop Streaming
+runs them: split small inputs upstream if the mapper needs more tasks.
 """
 
 from __future__ import annotations
@@ -50,6 +60,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,12 +93,16 @@ class Step:
         rewrites the map-output stream in place, runner.go:188-195) and
         the operation must be associative for the result to match the
         combiner-free plan.
-    reducer_tasks: optional shuffle-partition override for this step
-        (map_reduce_step.go:19-21 analog).
+    reducer_tasks: optional partition count for this step's one key
+        shuffle (map_reduce_step.go:19-21 analog), which AQE then keeps;
+        unset, the shuffle uses ``spark.sql.shuffle.partitions`` and AQE
+        may coalesce it.
     map_schema / reduce_schema: Spark DDL schema of the mapper / reducer
         output (pandas paths need declared schemas; Arrow enforces them).
-    sorted_values: sort each group by ``value`` before a Python reducer,
-        mirroring the byte-sorted shuffle stream the reference consumes.
+    sorted_values: give a Python reducer (and combiner) each group's rows
+        in ``value`` order (nulls last), mirroring the byte-sorted shuffle
+        stream the reference consumes; for the reducer this is a JVM
+        secondary sort on ``(key, value)``.
     """
 
     mapper: MapperFn | None = None
@@ -158,7 +173,7 @@ class Pipeline:
                 "Python reducers on a stream need applyInPandasWithState "
                 "(streaming.stateful_user_counts); use a builtin (SUM/COUNT) here"
             )
-        return _run_step(df, s, streaming=True)
+        return _run_step(df, s)
 
     def run_to_dir(
         self,
@@ -183,7 +198,7 @@ class Pipeline:
         return out
 
 
-def _run_step(df: DataFrame, s: Step, streaming: bool = False) -> DataFrame:
+def _run_step(df: DataFrame, s: Step) -> DataFrame:
     if s.mapper is not None:
         mapper = s.mapper
 
@@ -193,16 +208,8 @@ def _run_step(df: DataFrame, s: Step, streaming: bool = False) -> DataFrame:
                 if out is not None and len(out):
                     yield out
 
-        # mapper-task fan-out parity (the reference gets one mapper per
-        # input split; a small local file arrives as ONE split, which
-        # would serialize the Python mapper) — no-op on real cluster
-        # scans, skipped on streams (micro-batches already arrive split)
-        if streaming:
-            df = df.mapInPandas(map_batches, schema=s.map_schema)
-        else:
-            from gomrjob_spark.operators.text import spread
-
-            df = spread(df).mapInPandas(map_batches, schema=s.map_schema)
+        # one mapper task per input split, as Hadoop Streaming runs it
+        df = df.mapInPandas(map_batches, schema=s.map_schema)
 
     # map-side combining for Python reducers (map_reduce_step.go:15-17,
     # wiring runner.go:188-195): pre-reduce each Arrow batch's key groups
@@ -220,7 +227,7 @@ def _run_step(df: DataFrame, s: Step, streaming: bool = False) -> DataFrame:
                 if not len(pdf):
                     continue
                 outs = []
-                for k, g in pdf.groupby("key", sort=False):
+                for k, g in pdf.groupby("key", sort=False, dropna=False):
                     if comb_sorted and "value" in g.columns:
                         g = g.sort_values("value", kind="mergesort")
                     out = combiner(k, g)
@@ -231,23 +238,80 @@ def _run_step(df: DataFrame, s: Step, streaming: bool = False) -> DataFrame:
 
         df = df.mapInPandas(combine_batches, schema=comb_schema)
 
-    if s.reducer_tasks:
-        df = df.repartition(s.reducer_tasks, "key")
-
     if isinstance(s.reducer, str):
         if s.reducer not in _BUILTIN_REDUCERS:
             raise ValueError(f"unknown builtin reducer {s.reducer!r}")
+        if s.reducer_tasks:
+            df = df.repartition(s.reducer_tasks, "key")
         return _builtin_reduce(df, s.reducer)
 
-    reducer = s.reducer
-    sort_first = s.sorted_values
+    # the reference's shuffle: hash-partition by key, sort each partition
+    # (by value too under sorted_values — a JVM secondary sort), then cut
+    # key runs in one Python pass per partition (mrproto/protocol.go:101-116)
+    df = df.repartition(s.reducer_tasks, "key") if s.reducer_tasks else df.repartition("key")
+    order = [F.col("key")]
+    if s.sorted_values and "value" in df.columns:
+        order.append(F.col("value").asc_nulls_last())
+    reduce_runs = _run_length_reducer(s.reducer)
+    return df.sortWithinPartitions(*order).mapInPandas(reduce_runs, schema=s.reduce_schema)
 
-    def reduce_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if sort_first and "value" in pdf.columns:
-            pdf = pdf.sort_values("value", kind="mergesort")
-        return reducer(key[0] if len(key) == 1 else key, pdf)
 
-    return df.groupBy("key").applyInPandas(reduce_group, schema=s.reduce_schema)
+def _run_length_reducer(
+    reducer: ReducerFn,
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """A ``mapInPandas`` fn calling ``reducer(key, group)`` once per run of
+    equal keys in a key-sorted stream of batches. A run still open at the
+    end of a batch is carried into the next, so a key spanning batches is
+    reduced once; null keys form one run (``factorize`` codes them, as
+    ``groupBy`` does). Each group is 0..n-1 indexed; None or empty outputs
+    are dropped, and the rest leave once per input batch.
+
+    The returned closure references no module of this package, so Python
+    workers receive it by value and need not import ``gomrjob_spark``."""
+
+    def same_key(a: Any, b: Any) -> bool:
+        if pd.isna(a) or pd.isna(b):
+            return pd.isna(a) and pd.isna(b)
+        return bool(a == b)
+
+    def reduce_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        open_key: Any = None
+        pieces: list[pd.DataFrame] = []  # the open run's rows, one piece per batch
+        outs: list[pd.DataFrame] = []
+
+        def flush() -> None:
+            if len(pieces) == 1:
+                group = pieces[0].reset_index(drop=True)
+            else:
+                group = pd.concat(pieces, ignore_index=True)
+            out = reducer(open_key, group)
+            pieces.clear()
+            if out is not None and len(out):
+                outs.append(out)
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            keys = pdf["key"]
+            codes = pd.factorize(keys, use_na_sentinel=False)[0]
+            cuts = np.flatnonzero(codes[1:] != codes[:-1]) + 1
+            starts = np.concatenate(([0], cuts))
+            ends = np.concatenate((cuts, [len(pdf)]))
+            for i, (a, b) in enumerate(zip(starts, ends)):
+                k = keys.iat[a]
+                if pieces and not (i == 0 and same_key(k, open_key)):
+                    flush()
+                open_key = k
+                pieces.append(pdf.iloc[a:b])
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
+                outs.clear()
+        if pieces:
+            flush()
+        if outs:
+            yield outs[0]
+
+    return reduce_runs
 
 
 def _builtin_reduce(df: DataFrame, which: str) -> DataFrame:

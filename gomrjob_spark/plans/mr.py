@@ -10,9 +10,9 @@ the oracle gate:
   (mrproto/protocol.go:339-356) over raw internal-protocol lines.
 - ``mr_multistep``: two chained steps (runner.go:352-356 chaining, but as
   one fused Spark plan).
-- ``mr_python_reducer``: arbitrary per-group Python reducer via
-  applyInPandas — the escape hatch matching the reference's "any Go code
-  in the Reducer" contract.
+- ``mr_python_reducer``: arbitrary per-group Python reducer over
+  key-sorted runs — the escape hatch matching the reference's "any Go
+  code in the Reducer" contract.
 """
 
 from __future__ import annotations
@@ -150,10 +150,10 @@ def _range_reducer(key, pdf: pd.DataFrame) -> pd.DataFrame:
     """,
 )
 def mr_python_reducer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary Python reducer per key (value range in cents) through
-    applyInPandas — the 'any code in the Reducer' parity path. Heavy
-    lifting (cents conversion) stays JVM-side; Python sees one small
-    Arrow batch per key."""
+    """Arbitrary Python reducer per key (value range in cents), called
+    once per run of equal keys in a key-sorted partition — the 'any code
+    in the Reducer' parity path. Heavy lifting (cents conversion) stays
+    JVM-side; Python sees each key's rows as one small frame."""
     events = load_table(spark, sf_dir, "events")
     kv = events.select(
         F.col("event_type").alias("key"),

@@ -10,6 +10,7 @@ emits it for interop with existing Hadoop-Streaming consumers.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,21 +49,33 @@ def write_part_files(
     optionally gzipped (runner.go:160-163 analog).
 
     ``num_files`` controls output fan-out (the ReducerTasks analog,
-    runner.go:54); ``sort_by`` gives byte-ordered output within files for
-    golden-file parity (§1.3 byte-lexicographic ordering)."""
-    if sort_by:
-        # global sort: range partitioner makes part-file order total
-        df = df.repartitionByRange(num_files or df.sparkSession.sparkContext.defaultParallelism, *sort_by).sortWithinPartitions(*sort_by)
-    elif num_files:
-        # repartition, not coalesce: the caller asked for an exact file
-        # fan-out, and coalesce cannot INCREASE partition count — for
-        # gzip output the file count IS the downstream read parallelism
-        # (gzip is not splittable), so widening must work
-        df = df.repartition(num_files)
-    writer = df.write.mode("overwrite")
-    if compress:
-        writer = writer.option("compression", "gzip")
-    writer.text(path)
+    runner.go:54). ``sort_by`` makes the output a total order, byte-sorted
+    within and across part files, for golden-file parity (§1.3
+    byte-lexicographic ordering). A sorted write computes its input once:
+    the range partitioner's bound-sampling job fills a cache that the
+    write then reads, so upstream Python code and counters run once."""
+    owned = bool(sort_by) and df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        out = df
+        if sort_by:
+            # global sort: range partitioner makes part-file order total
+            n = num_files or df.sparkSession.sparkContext.defaultParallelism
+            out = df.repartitionByRange(n, *sort_by).sortWithinPartitions(*sort_by)
+        elif num_files:
+            # repartition, not coalesce: the caller asked for an exact file
+            # fan-out, and coalesce cannot INCREASE partition count — for
+            # gzip output the file count IS the downstream read parallelism
+            # (gzip is not splittable), so widening must work
+            out = df.repartition(num_files)
+        writer = out.write.mode("overwrite")
+        if compress:
+            writer = writer.option("compression", "gzip")
+        writer.text(path)
+    finally:
+        if owned:
+            df.unpersist()
 
 
 def write_tsv_part_files(

@@ -12,7 +12,6 @@ byte-lexicographically by serialized key — the reference's output order
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gomrjob_spark.pipeline import Pipeline, Step
 from gomrjob_spark.protocols import format_kv_lines
@@ -27,9 +26,11 @@ def lines_df(spark: SparkSession, text: str) -> DataFrame:
 
 def collect_kv_output(result: DataFrame) -> str:
     """Render a key/value result to byte-sorted ``k\\tv`` text (the shape
-    golden files use, example/example_mr_test.go:26-29)."""
-    out = format_kv_lines(result).orderBy(F.col("value"))
-    return "".join(r.value + "\n" for r in out.collect())
+    golden files use, example/example_mr_test.go:26-29). The lines are
+    sorted on the driver by their UTF-8 bytes: a Spark ``orderBy`` would
+    sample its input in a job of its own and run the pipeline twice."""
+    lines = [r.value for r in format_kv_lines(result).collect()]
+    return "".join(ln + "\n" for ln in sorted(lines, key=str.encode))
 
 
 def run_steps(spark: SparkSession, steps: list[Step] | Pipeline, input_text: str) -> str:

@@ -6,6 +6,9 @@ Golden fixture source: /root/reference/example/example_mr_test.go:14-31
 
 from __future__ import annotations
 
+from collections import Counter
+from contextlib import contextmanager
+
 import pandas as pd
 import pytest
 
@@ -85,21 +88,150 @@ def test_multistep_chaining(spark):
 
 def test_python_reducer_sorted_values(spark):
     """sorted_values gives the reducer the byte-sorted stream the reference
-    guarantees (SURVEY.md §1.3)."""
+    guarantees (SURVEY.md §1.3), across Arrow batch boundaries too."""
 
-    def first_value(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"key": [key], "value": [pdf["value"].iloc[0]]})
+    def joined(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"key": [key], "value": ["|".join(pdf["value"])]})
 
+    values = ["z", "m", "b", "é", "Z", "a", "y", "\u00ff", "c", "😀", "\ufb01", "m"]
     kv = spark.createDataFrame(
-        [("a", "z"), ("a", "m"), ("a", "b")], "key string, value string"
+        [("a", v) for v in values] + [("b", "q"), ("b", "p")], "key string, value string"
     ).repartition(4)
     pipe = Pipeline(
-        steps=[
-            Step(reducer=first_value, reduce_schema="key string, value string", sorted_values=True)
-        ]
+        steps=[Step(reducer=joined, reduce_schema="key string, value string", sorted_values=True)]
     )
-    got = pipe.run(kv).collect()
-    assert [(r.key, r.value) for r in got] == [("a", "b")]
+    with _arrow_batch_rows(spark, 3):
+        got = sorted((r.key, r.value) for r in pipe.run(kv).collect())
+    assert got == [("a", "|".join(sorted(values, key=str.encode))), ("b", "p|q")]
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n: int):
+    """Cut every Arrow batch at ``n`` rows, so small inputs cross batch
+    boundaries inside one task."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, old)
+
+
+def _run_stats():
+    """A reducer emitting one row per call: the run's length, or -1 when
+    its frame is not indexed 0..n-1. Built per test, so workers receive
+    it by value rather than importing this module."""
+
+    def run_stats(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        indexed = list(pdf.index) == list(range(len(pdf)))
+        return pd.DataFrame({"key": [key], "value": [len(pdf) if indexed else -1]})
+
+    return run_stats
+
+
+@pytest.mark.parametrize("reducer_tasks", [None, 1, 3])
+def test_python_reducer_sees_each_key_once_across_batches(spark, reducer_tasks):
+    """Run-length grouping: a key whose rows span several Arrow batches
+    reaches the reducer exactly once, with all of its rows, 0..n-1 indexed
+    — under the default shuffle width and an explicit reducer_tasks."""
+    rows = [("hot", str(i)) for i in range(10)] + [("a", "1"), ("a", "2"), ("m", "3")]
+    rows += [("z", str(i)) for i in range(4)]
+    kv = spark.createDataFrame(rows, "key string, value string").repartition(4)
+    step = Step(
+        reducer=_run_stats(), reduce_schema="key string, value bigint", reducer_tasks=reducer_tasks
+    )
+    with _arrow_batch_rows(spark, 3):
+        out = Pipeline(steps=[step]).run(kv)
+        got = sorted((r.key, r.value) for r in out.collect())
+    assert got == [("a", 2), ("hot", 10), ("m", 1), ("z", 4)]
+    if reducer_tasks:
+        assert out.rdd.getNumPartitions() == reducer_tasks
+
+
+def test_python_reducer_null_keys_form_one_group(spark):
+    """Null keys are one group, as in groupBy, even across batches."""
+    rows = [(None, str(i)) for i in range(7)] + [("a", "1"), ("b", "2"), ("b", "3")]
+    kv = spark.createDataFrame(rows, "key string, value string").repartition(3)
+    step = Step(reducer=_run_stats(), reduce_schema="key string, value bigint", reducer_tasks=1)
+    with _arrow_batch_rows(spark, 3):
+        got = Counter((r.key, r.value) for r in Pipeline(steps=[step]).run(kv).collect())
+    assert got == Counter([(None, 7), ("a", 1), ("b", 2)])
+
+
+def test_python_reducer_empty_and_none_outputs_are_skipped(spark):
+    """A reducer may emit nothing for a key: None and empty frames are
+    dropped, and the other keys' rows still arrive."""
+
+    def sparse(key, pdf: pd.DataFrame):
+        if key == "none":
+            return None
+        if key == "empty":
+            return pd.DataFrame({"key": [], "value": []})
+        return pd.DataFrame({"key": [key], "value": [len(pdf)]})
+
+    rows = [(k, "1") for k in ["none"] * 4 + ["empty"] * 5 + ["kept"] * 2 + ["also"]]
+    kv = spark.createDataFrame(rows, "key string, value string")
+    step = Step(reducer=sparse, reduce_schema="key string, value bigint", reducer_tasks=1)
+    with _arrow_batch_rows(spark, 3):
+        got = sorted((r.key, r.value) for r in Pipeline(steps=[step]).run(kv).collect())
+    assert got == [("also", 1), ("kept", 2)]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_step_plan_shapes(spark):
+    """A Python reducer is one sorted map pass after one hash shuffle, not
+    a grouped-pandas operator; a mapper runs on its input's own splits,
+    with no round-robin exchange in front of it."""
+    kv = spark.createDataFrame([("a", "1"), ("b", "2")], "key string, value string")
+    reduced = _plan(
+        Pipeline(
+            steps=[Step(reducer=_run_stats(), reduce_schema="key string, value bigint")]
+        ).run(kv)
+    )
+    assert "MapInPandas" in reduced
+    assert "FlatMapGroupsInPandas" not in reduced
+    assert reduced.count("Exchange hashpartitioning") == 1
+
+    mapped = _plan(
+        Pipeline(steps=[Step(mapper=field_count_mapper, reducer=SUM)]).run(
+            lines_df(spark, EXAMPLE_INPUT)
+        )
+    )
+    assert "MapInPandas" in mapped
+    assert "RoundRobinPartitioning" not in mapped
+
+
+@pytest.mark.parametrize("sorted_output", [False, True])
+def test_python_reducer_counter_counts_once_per_group(spark, tmp_path, sorted_output):
+    """A counter bumped inside a Python reducer counts each group once,
+    also when the sorted sink samples its input before the write."""
+    from gomrjob_spark.sources.lines import read_text_dir
+
+    counters = Counters(spark)
+    acc = counters.counter("reduce", "groups")
+
+    def count_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        acc.add(1)
+        return pd.DataFrame({"key": [key], "value": [len(pdf)]})
+
+    kv = spark.createDataFrame(
+        [(f"k{i:02d}", str(j)) for i in range(50) for j in range(3)], "key string, value string"
+    )
+    out_dir = str(tmp_path / "out")
+    Pipeline(
+        steps=[Step(reducer=count_group, reduce_schema="key string, value bigint")]
+    ).run_to_dir(kv, out_dir, sorted_output=sorted_output)
+    assert counters.value("reduce", "groups") == 50
+    want = [f"k{i:02d}\t3" for i in range(50)]
+    if sorted_output:  # a total order: part files in name order, each sorted
+        parts = sorted(tmp_path.glob("out/part-*"))
+        assert [ln for p in parts for ln in p.read_text().splitlines()] == want
+    else:
+        assert sorted(r.value for r in read_text_dir(spark, out_dir).collect()) == want
 
 
 def test_reducer_tasks_override(spark):
@@ -138,7 +270,8 @@ def test_combiner_matches_combiner_free_plan(spark):
         return pd.DataFrame({"key": [key], "value": [int(pdf["value"].max())]})
 
     kv = spark.createDataFrame(
-        [("a", i) for i in range(100)] + [("b", i * 7) for i in range(50)],
+        [("a", i) for i in range(100)] + [("b", i * 7) for i in range(50)]
+        + [(None, 3), (None, 11)],
         "key string, value bigint",
     ).repartition(4)
     plain = Pipeline(
@@ -153,7 +286,10 @@ def test_combiner_matches_combiner_free_plan(spark):
             )
         ]
     ).run(kv)
-    assert sorted(plain.collect()) == sorted(combined.collect())
+    # null keys survive the combiner as one group, as in the plain plan
+    got = Counter(tuple(r) for r in combined.collect())
+    assert Counter(tuple(r) for r in plain.collect()) == got
+    assert got[(None, 11)] == 1
 
 
 def test_combiner_shrinks_shuffle_rows_on_hot_key(spark):
